@@ -61,25 +61,25 @@ object ApproxBetweenness {
           localNbrRowCap: Long = ApproxCloseness.LocalNbrRowThreshold): DataFrame = {
     def sumD(c: org.apache.spark.sql.Column) =
       if (portableSum) graft.core.PortableSum.fixedSum(c, 1e12) else sum(c)
-    // cache the edge pipeline once — shared by nbrs/verts/explicitSources
-    // (same rationale as ApproxCloseness.run)
-    edges.persist(StorageLevel.MEMORY_AND_DISK)
+    // cache the edge pipeline once — shared by the adjacency, verts and
+    // explicitSources; a caller's cache is used and left in place (same
+    // rationale as ApproxCloseness.run)
+    val ownCache = edges.storageLevel == StorageLevel.NONE
+    if (ownCache) edges.persist(StorageLevel.MEMORY_AND_DISK)
+    val local = 2L * edges.count() <= localNbrRowCap
     // explicit-source local short-circuit: one pass over the cached
     // edges derives everything (see ApproxCloseness.run for the
     // equivalence argument — n is the adjacency endpoint count, kEff
     // the collected source count)
-    if (explicitSources.isDefined &&
-        2L * edges.count() <= localNbrRowCap) {
-      val adjRows = ApproxCloseness.collectAdjCanonical(edges)
+    if (explicitSources.isDefined && local) {
+      val adj = PathCentralitySmall.Adj(edges)
       val srcs = ApproxCloseness.collectSources(explicitSources.get)
-      val nLocal = ApproxCloseness.localVertexCount(adjRows)
       val out = PathCentralitySmall.betweennessLocal(
-        spark, adjRows, srcs, nLocal, srcs.length.toLong, maxLevels,
+        spark, adj, srcs, adj.nV, srcs.length.toLong, maxLevels,
         normalized, portableSum)
-      edges.unpersist(false)
+      if (ownCache) edges.unpersist(false)
       return out
     }
-    val nbrs = Edges.neighbors(edges).persist(StorageLevel.MEMORY_AND_DISK)
     val verts = Edges.vertices(edges).persist(StorageLevel.MEMORY_AND_DISK)
     val n = verts.count()
 
@@ -88,18 +88,18 @@ object ApproxBetweenness {
         .limit(math.min(k.toLong, n).toInt).select(col("id").as("s"))))
     val kEff = sources.count()
 
-    if (nbrs.count() <= localNbrRowCap) {
+    if (local) {
       val out = PathCentralitySmall.betweennessLocal(
-        spark, ApproxCloseness.collectAdj(nbrs),
+        spark, PathCentralitySmall.Adj(edges),
         ApproxCloseness.collectSources(sources), n, kEff, maxLevels,
         normalized, portableSum)
       graft.core.Lineage.release(sources)
-      nbrs.unpersist(false)
       verts.unpersist(false)
-      edges.unpersist(false)
+      if (ownCache) edges.unpersist(false)
       return out
     }
 
+    val nbrs = Edges.neighbors(edges).persist(StorageLevel.MEMORY_AND_DISK)
     // ---- forward: (s, id, dist, sigma), one frame per level ----------
     var levels = List(graft.core.Lineage.truncate(
       sources.select(col("s"), col("s").as("id"), lit(0L).as("dist"),
@@ -186,7 +186,7 @@ object ApproxBetweenness {
     graft.core.Lineage.release(sources)
     nbrs.unpersist(false)
     verts.unpersist(false)
-    edges.unpersist(false)
+    if (ownCache) edges.unpersist(false)
     out
   }
 }

@@ -66,32 +66,31 @@ object ApproxCloseness {
           seed: Long = 42, maxLevels: Int = 128,
           explicitSources: Option[DataFrame] = None,
           localNbrRowCap: Long = LocalNbrRowThreshold): DataFrame = {
-    // Cache the edge pipeline itself (optimization round 6): nbrs,
-    // verts AND any caller-supplied source frame all contain it as a
-    // subtree — the old code re-executed the scan+distinct once per
-    // derived frame (2-3x per run). CacheManager plan-matching also
-    // covers the caller's explicitSources expression.
-    edges.persist(StorageLevel.MEMORY_AND_DISK)
+    // Cache the edge pipeline itself (optimization round 6): the
+    // adjacency, verts AND any caller-supplied source frame all contain
+    // it as a subtree — the old code re-executed the scan+distinct once
+    // per derived frame (2-3x per run). CacheManager plan-matching also
+    // covers the caller's explicitSources expression. A frame the
+    // caller already cached is used as is and left cached.
+    val ownCache = edges.storageLevel == StorageLevel.NONE
+    if (ownCache) edges.persist(StorageLevel.MEMORY_AND_DISK)
+    val local = 2L * edges.count() <= localNbrRowCap
     // Explicit-source local short-circuit: with caller-chosen sources
     // nothing distributed is needed beyond ONE pass over the cached
     // edges — the vertex count is the adjacency's endpoint count
     // (identical to Edges.vertices on a canonical table) and kEff is
-    // the collected source count, so the verts/nbrs frames, their
-    // caches and their counting jobs (a dozen scheduler round-trips on
-    // benchmark-scale graphs) are skipped entirely. The hash-sample
-    // path below still derives its sample from the distributed verts
-    // frame (Spark xxhash64 ordering is not replicated driver-side).
-    if (explicitSources.isDefined &&
-        2L * edges.count() <= localNbrRowCap) {
-      val adjRows = collectAdjCanonical(edges)
+    // the collected source count, so the verts frame, its cache and its
+    // counting jobs are skipped entirely. The hash-sample path below
+    // still derives its sample from the distributed verts frame (Spark
+    // xxhash64 ordering is not replicated driver-side).
+    if (explicitSources.isDefined && local) {
+      val adj = PathCentralitySmall.Adj(edges)
       val srcs = collectSources(explicitSources.get)
-      val nLocal = localVertexCount(adjRows)
       val out = PathCentralitySmall.closenessLocal(
-        spark, adjRows, srcs, nLocal, srcs.length.toLong, maxLevels)
-      edges.unpersist(false)
+        spark, adj, srcs, adj.nV, srcs.length.toLong, maxLevels)
+      if (ownCache) edges.unpersist(false)
       return out
     }
-    val nbrs = Edges.neighbors(edges).persist(StorageLevel.MEMORY_AND_DISK)
     val verts = Edges.vertices(edges).persist(StorageLevel.MEMORY_AND_DISK)
     val n = verts.count()
 
@@ -101,16 +100,16 @@ object ApproxCloseness {
         .limit(math.min(k.toLong, n).toInt).select(col("id").as("s"))))
     val kEff = sources.count()
 
-    if (nbrs.count() <= localNbrRowCap) {
+    if (local) {
       val out = PathCentralitySmall.closenessLocal(
-        spark, collectAdj(nbrs), collectSources(sources), n, kEff, maxLevels)
+        spark, PathCentralitySmall.Adj(edges), collectSources(sources), n, kEff, maxLevels)
       graft.core.Lineage.release(sources)
-      nbrs.unpersist(false)
       verts.unpersist(false)
-      edges.unpersist(false)
+      if (ownCache) edges.unpersist(false)
       return out
     }
 
+    val nbrs = Edges.neighbors(edges).persist(StorageLevel.MEMORY_AND_DISK)
     var dist = graft.core.Lineage.truncate(
       sources.select(col("s"), col("s").as("id"), lit(0L).as("dist")))
     var frontier = dist
@@ -155,63 +154,10 @@ object ApproxCloseness {
     graft.core.Lineage.release(sources)
     nbrs.unpersist(false)
     verts.unpersist(false)
-    edges.unpersist(false)
+    if (ownCache) edges.unpersist(false)
     out
-  }
-
-  /** Collect the 2-column neighbor table into two primitive long
-    * arrays (no per-row tuple boxing — round-5 advice item: at the 2M
-    * local-gate cap the old Array[(Long, Long)] held ~2M boxed tuples).
-    */
-  private[algos] def collectAdj(nbrs: DataFrame): (Array[Long], Array[Long]) = {
-    val rows = nbrs.collect()
-    val s = new Array[Long](rows.length)
-    val d = new Array[Long](rows.length)
-    var i = 0
-    while (i < rows.length) {
-      val r = rows(i); s(i) = r.getLong(0); d(i) = r.getLong(1); i += 1
-    }
-    (s, d)
-  }
-
-  /** [[collectAdj]] from the CANONICAL edge table: collects E rows and
-    * mirrors both directions on the driver — half the rows crossing the
-    * driver boundary, and no Spark-side symmetrize union. Row ORDER is
-    * preserved too, not just the multiset: `Edges.neighbors` is
-    * union(forward, mirrored) and a union concatenates its children's
-    * partitions, so `collectAdj(neighbors(e))` also yields all forward
-    * rows in scan order followed by all mirrored rows — the exact
-    * sequence built here. [[PathCentralitySmall.Adj]] therefore sees
-    * identical input (order matters for the non-portable betweenness
-    * float accumulation; the portable/oracle path is order-independent
-    * regardless).
-    */
-  private[algos] def collectAdjCanonical(edges: DataFrame): (Array[Long], Array[Long]) = {
-    val rows = edges.select("src", "dst").collect()
-    val n = rows.length
-    val s = new Array[Long](2 * n)
-    val d = new Array[Long](2 * n)
-    var i = 0
-    while (i < n) {
-      val r = rows(i)
-      val a = r.getLong(0); val b = r.getLong(1)
-      s(i) = a; d(i) = b
-      s(n + i) = b; d(n + i) = a
-      i += 1
-    }
-    (s, d)
   }
 
   private[algos] def collectSources(sources: DataFrame): Array[Long] =
     sources.collect().map(_.getLong(0))
-
-  /** Distinct endpoint count of a collected adjacency — identical to
-    * Edges.vertices(edges).count() on a canonical edge table.
-    */
-  private[algos] def localVertexCount(adj: (Array[Long], Array[Long])): Long = {
-    val s = new java.util.HashSet[java.lang.Long](adj._1.length * 2)
-    var i = 0
-    while (i < adj._1.length) { s.add(adj._1(i)); s.add(adj._2(i)); i += 1 }
-    s.size.toLong
-  }
 }

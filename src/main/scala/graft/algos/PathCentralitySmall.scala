@@ -1,7 +1,8 @@
 package graft.algos
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.core.LocalGraph
 
 /** Driver-local kernels behind the gated small-graph fast paths of
   * [[ApproxCloseness]] and [[ApproxBetweenness]].
@@ -19,54 +20,29 @@ import org.apache.spark.sql.SparkSession
   */
 private[algos] object PathCentralitySmall {
 
-  /** Dense-index CSR adjacency over collected neighbor rows (two
-    * parallel primitive long arrays — no per-row tuple boxing, which at
-    * the 2M-row local-gate cap cost hundreds of MB of transient driver
-    * heap; round-5 advice item). The rows are a MULTISET — duplicates
+  /** Dense-index CSR adjacency of a canonical edge table, built by
+    * [[graft.core.LocalGraph]] from E collected rows mirrored on the
+    * driver: slots are filled forward rows first, then mirrored rows —
+    * the row order of collecting `Edges.neighbors(edges)`, whose union
+    * concatenates its children's partitions. Order matters for the
+    * non-portable betweenness float accumulation; the portable path is
+    * order-independent regardless. The rows are a MULTISET — duplicates
     * are kept because the betweenness sigma accumulation adds once per
     * row, exactly like the distributed frontier join against the
     * neighbor table.
     */
-  final class Adj(srcA: Array[Long], dstA: Array[Long]) {
-    val ids: Array[Long] = {
-      val all = new Array[Long](srcA.length + dstA.length)
-      System.arraycopy(srcA, 0, all, 0, srcA.length)
-      System.arraycopy(dstA, 0, all, srcA.length, dstA.length)
-      java.util.Arrays.sort(all)
-      // in-place dedup of the sorted ids
-      var w = 0
-      var i = 0
-      while (i < all.length) {
-        if (w == 0 || all(i) != all(w - 1)) { all(w) = all(i); w += 1 }
-        i += 1
-      }
-      java.util.Arrays.copyOf(all, w)
-    }
-    private val idx = {
-      val m = new java.util.HashMap[java.lang.Long, Integer](ids.length * 2)
-      var i = 0; while (i < ids.length) { m.put(ids(i), i); i += 1 }
-      m
-    }
+  final class Adj(val ids: Array[Long], val offsets: Array[Int],
+                  val targets: Array[Int]) {
     def nV: Int = ids.length
-    def indexOf(id: Long): Int = {
-      val v = idx.get(id)
-      if (v == null) -1 else v.intValue()
-    }
-    val (offsets, targets) = {
-      val deg = new Array[Int](nV)
-      var i = 0
-      while (i < srcA.length) { deg(idx.get(srcA(i)).intValue()) += 1; i += 1 }
-      val off = new Array[Int](nV + 1)
-      i = 0; while (i < nV) { off(i + 1) = off(i) + deg(i); i += 1 }
-      val pos = off.clone()
-      val tgt = new Array[Int](srcA.length)
-      i = 0
-      while (i < srcA.length) {
-        val ia = idx.get(srcA(i)).intValue()
-        tgt(pos(ia)) = idx.get(dstA(i)).intValue(); pos(ia) += 1
-        i += 1
-      }
-      (off, tgt)
+    def indexOf(id: Long): Int = LocalGraph.indexOf(ids, id)
+  }
+
+  object Adj {
+    def apply(edges: DataFrame): Adj = {
+      val (a, b) = LocalGraph.collectPairs(edges, "src", "dst")
+      val (ids, s, d) = LocalGraph.dense(a, b)
+      val (offsets, targets) = LocalGraph.csr(ids.length, s ++ d, d ++ s)
+      new Adj(ids, offsets, targets)
     }
   }
 
@@ -102,10 +78,9 @@ private[algos] object PathCentralitySmall {
   }
 
   /** Driver-local twin of [[ApproxCloseness.run]]'s estimator. */
-  def closenessLocal(spark: SparkSession, adjRows: (Array[Long], Array[Long]),
+  def closenessLocal(spark: SparkSession, adj: Adj,
                      sources: Array[Long], n: Long, kEff: Long,
                      maxLevels: Int): DataFrame = {
-    val adj = new Adj(adjRows._1, adjRows._2)
     val sd = new Array[Long](adj.nV)
     val r = new Array[Long](adj.nV)
     sources.foreach { s =>
@@ -144,11 +119,10 @@ private[algos] object PathCentralitySmall {
     * sigma (integer-valued double sums — exact under any order) and
     * identical backward quantization points on the portable path.
     */
-  def betweennessLocal(spark: SparkSession, adjRows: (Array[Long], Array[Long]),
+  def betweennessLocal(spark: SparkSession, adj: Adj,
                        sources: Array[Long], n: Long, kEff: Long,
                        maxLevels: Int, normalized: Boolean,
                        portableSum: Boolean): DataFrame = {
-    val adj = new Adj(adjRows._1, adjRows._2)
     val SCALE = 1e12
     def quant(x: Double): BigInt =
       BigDecimal(graft.functions.PortableRound.halfUp(x * SCALE)).toBigInt

@@ -118,27 +118,16 @@ object TriangleCount {
     // total order: (degree, id) ascending — ids(a) < ids(b) iff a < b
     def precedes(a: Int, b: Int): Boolean =
       deg(a) < deg(b) || (deg(a) == deg(b) && a < b)
-    val outDeg = new Array[Int](n)
+    // orient every edge from its lower to its higher endpoint
+    val from = new Array[Int](srcA.length)
+    val to = new Array[Int](srcA.length)
     i = 0
     while (i < srcA.length) {
-      if (precedes(sIdx(i), dIdx(i))) outDeg(sIdx(i)) += 1
-      else outDeg(dIdx(i)) += 1
+      val a = sIdx(i); val b = dIdx(i)
+      if (precedes(a, b)) { from(i) = a; to(i) = b } else { from(i) = b; to(i) = a }
       i += 1
     }
-    val rowPtr = new Array[Int](n + 1)
-    i = 0
-    while (i < n) { rowPtr(i + 1) = rowPtr(i) + outDeg(i); i += 1 }
-    val out = new Array[Int](rowPtr(n))
-    locally {
-      val cursor = rowPtr.clone()
-      var j = 0
-      while (j < srcA.length) {
-        val a = sIdx(j); val b = dIdx(j)
-        if (precedes(a, b)) { out(cursor(a)) = b; cursor(a) += 1 }
-        else { out(cursor(b)) = a; cursor(b) += 1 }
-        j += 1
-      }
-    }
+    val (rowPtr, out) = graft.core.LocalGraph.csr(n, from, to)
     i = 0
     while (i < n) {
       java.util.Arrays.sort(out, rowPtr(i), rowPtr(i + 1))

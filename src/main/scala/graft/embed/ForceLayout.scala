@@ -101,33 +101,19 @@ object ForceLayout {
     var eidBc: Option[org.apache.spark.broadcast.Broadcast[(Array[Long], Array[Long])]] = None
     val (eidEdges, sEids, sSrcs, sDsts) =
       if (edgeCount <= cfg.localInitEdgeCap) {
-        val rows = edges.select("src", "dst").collect()
-        val pairs = new Array[Long](rows.length * 2)
-        var i = 0
-        while (i < rows.length) {
-          val r = rows(i)
-          pairs(2 * i) = r.getLong(0); pairs(2 * i + 1) = r.getLong(1)
-          i += 1
-        }
+        val (srcA, dstA) = graft.core.LocalGraph.collectPairs(edges, "src", "dst")
+        val m = srcA.length
         // dense eids in (src, dst) sort order — exactly Ids.dense's
         // two-phase range rank (rows are distinct, so the order is total)
-        val order = Array.range(0, rows.length)
-        val boxed = order.map(Integer.valueOf)
+        val boxed = Array.range(0, m).map(Integer.valueOf)
         java.util.Arrays.sort(boxed, new java.util.Comparator[Integer] {
           def compare(a: Integer, b: Integer): Int = {
-            val c = java.lang.Long.compare(pairs(2 * a), pairs(2 * b))
-            if (c != 0) c
-            else java.lang.Long.compare(pairs(2 * a + 1), pairs(2 * b + 1))
+            val c = java.lang.Long.compare(srcA(a), srcA(b))
+            if (c != 0) c else java.lang.Long.compare(dstA(a), dstA(b))
           }
         })
-        val srcSorted = new Array[Long](rows.length)
-        val dstSorted = new Array[Long](rows.length)
-        i = 0
-        while (i < rows.length) {
-          val o = boxed(i).intValue()
-          srcSorted(i) = pairs(2 * o); dstSorted(i) = pairs(2 * o + 1)
-          i += 1
-        }
+        val srcSorted = boxed.map(o => srcA(o.intValue()))
+        val dstSorted = boxed.map(o => dstA(o.intValue()))
         // ship the sorted edge list as TWO PRIMITIVE ARRAYS behind a
         // broadcast + range map: parallelize of (Long,Long,Long) tuples
         // would pin hundreds of MB of boxed tuples on the driver for the
@@ -138,7 +124,7 @@ object ForceLayout {
         val bc = spark.sparkContext.broadcast((srcSorted, dstSorted))
         eidBc = Some(bc)
         val df = spark.sparkContext
-          .parallelize(0 until rows.length, math.max(1, sessP))
+          .parallelize(0 until m, math.max(1, sessP))
           .map(i => (bc.value._1(i), bc.value._2(i), i.toLong))
           .toDF("src", "dst", "eid")
           .persist(StorageLevel.MEMORY_AND_DISK)
@@ -146,8 +132,8 @@ object ForceLayout {
         // XXH64.hashLong(eid, 42) is Spark's xxhash64(col) bit-for-bit
         // (the DetRandom.uniformLocal replica argument)
         import org.apache.spark.sql.catalyst.expressions.XXH64
-        val hashes = Array.tabulate(rows.length)(e => XXH64.hashLong(e.toLong, 42L))
-        val byHash = Array.range(0, rows.length).map(Integer.valueOf)
+        val hashes = Array.tabulate(m)(e => XXH64.hashLong(e.toLong, 42L))
+        val byHash = Array.range(0, m).map(Integer.valueOf)
         java.util.Arrays.sort(byHash, new java.util.Comparator[Integer] {
           def compare(a: Integer, b: Integer): Int = {
             val c = java.lang.Long.compare(hashes(a), hashes(b))
@@ -199,13 +185,6 @@ object ForceLayout {
     // empty layout: no state to iterate (the stats collect below would
     // otherwise read a null aggregate row); returns the empty positions
     // frame unchanged, like the old all-lazy loop did
-    val dbg = sys.env.contains("GRAFT_LAYOUT_DEBUG")
-    def phase[A](label: String)(f: => A): A =
-      if (!dbg) f else {
-        val t0 = System.nanoTime(); val r = f
-        System.err.println(f"[layout] $label: ${(System.nanoTime()-t0)/1e9}%.3f s")
-        r
-      }
     // the ≤2*sampleSize state rows the per-superstep refresh needs;
     // after the first iteration the refresh rides the state
     // materialization action (see the end of the loop)
@@ -215,7 +194,7 @@ object ForceLayout {
         .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
     var posMap: Map[Long, Array[Double]] =
       if (vCount > 0 && iter < iterations)
-        phase("sample collect (init)")(collectSamplePositions(pos))
+        collectSamplePositions(pos)
       else Map.empty
     while (iter < iterations && vCount > 0) {
       // gather endpoint positions + midpoint in ONE cached E-row frame
@@ -369,7 +348,7 @@ object ForceLayout {
       val statCols = (0 until d).flatMap(j => Seq(
         avg(element_at(col("pos"), j + 1)).as(s"m$j"),
         stddev_pop(element_at(col("pos"), j + 1)).as(s"s$j")))
-      val statRow = phase("stats agg (materializes moved)")(moved.agg(statCols.head, statCols.tail: _*).head())
+      val statRow = moved.agg(statCols.head, statCols.tail: _*).head()
       val normalized = moved
         .select(col("id"), array((0 until d).map(j =>
           (element_at(col("pos"), j + 1) - lit(statRow.getDouble(2 * j))) /
@@ -381,7 +360,7 @@ object ForceLayout {
       // checkpoint AND returns the refreshed positions — the old
       // separate broadcast-join sample job per superstep is gone.
       val isLast = iter == iterations - 1
-      val next = phase("truncate+refresh")(cfg.checkpoint match {
+      val next = cfg.checkpoint match {
         case Some(cm) if (iter + 1) % cfg.checkpointInterval == 0 || isLast =>
           val c = cm.commit(iter, normalized, Map("iteration" -> iter.toDouble))
           if (!isLast) posMap = collectSamplePositions(c)
@@ -393,7 +372,7 @@ object ForceLayout {
             posMap = collectSamplePositions(nx)
             nx
           }
-      })
+      }
       ep.unpersist(false)
       moved.unpersist(false)
       graft.core.Lineage.release(pos) // next is materialized; old state is dead

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.core.DetRandom
+import graft.core.{DetRandom, LocalGraph}
 import graft.graph.Edges
 
 /** Spectral initialization: the d+1 smallest eigenvectors of the
@@ -78,28 +78,10 @@ object SpectralInit {
       return Seq.empty[(Long, Seq[Double])].toDF("id", "pos")
     }
     if (eCount <= localEdgeCap) {
-      val dbg = sys.env.contains("GRAFT_LAYOUT_DEBUG")
-      def ph[A](l: String)(f: => A): A = if (!dbg) f else {
-        val t0 = System.nanoTime(); val r = f
-        System.err.println(f"[spectral] $l: ${(System.nanoTime()-t0)/1e9}%.3f s"); r
-      }
-      // two primitive long arrays — no per-row tuple boxing (same
-      // posture as PathCentralitySmall.Adj)
-      val rows = ph("edge collect")(edges.select("src", "dst").collect())
-      val srcA = new Array[Long](rows.length)
-      val dstA = new Array[Long](rows.length)
-      var i = 0
-      while (i < rows.length) {
-        val r = rows(i); srcA(i) = r.getLong(0); dstA(i) = r.getLong(1); i += 1
-      }
-      val nV = {
-        val s = new java.util.HashSet[java.lang.Long](rows.length * 2)
-        var j = 0
-        while (j < srcA.length) { s.add(srcA(j)); s.add(dstA(j)); j += 1 }
-        s.size
-      }
-      if (nV <= localCap)
-        return ph("runLocal")(runLocal(spark, srcA, dstA, d, maxIter, seed, gramTol))
+      val (srcA, dstA) = LocalGraph.collectPairs(edges, "src", "dst")
+      val (ids, sIdx, dIdx) = LocalGraph.dense(srcA, dstA)
+      if (ids.length <= localCap)
+        return runLocal(spark, ids, sIdx, dIdx, d, maxIter, seed, gramTol)
     }
     val nbrs = Edges.neighbors(edges)
     val deg = Edges.degrees(edges)
@@ -215,23 +197,11 @@ object SpectralInit {
     out
   }
 
-  /** Driver-local execution of the identical orthogonal iteration (see
-    * LocalCap): same sqrt(deg)/hash init, same y = (x + Mx)/2 update,
-    * same Gram/Cholesky orthonormalization and stop.
-    */
-  /** (L^-1)^T for G = L L^T — the orthonormalization coefficient matrix
-    * both iteration paths apply. Hand-rolled k x k (k = d+1, tiny)
-    * Cholesky + forward-substitution inverse: the breeze
-    * `inv(cholesky(gm))` it replaces dispatched through the netlib
-    * LAPACK fallback at ~15 ms PER CALL on a 3x3 — ~0.9 s of every
-    * 60-iteration local solve. Shared by the local and distributed
-    * loops, so cross-path parity is preserved by construction.
-    */
   /** max |gm - pg| entrywise (pg = None: max |gm|) — the Gram
     * convergence check. Plain loops: the breeze
     * `max(abs(gm - pg))` chain it replaces cost ~14 ms per CALL in
     * generic UFunc dispatch on a 3x3, dominating the local solve after
-    * the Cholesky fix below. Same max over the same entries.
+    * the Cholesky fix. Same max over the same entries.
     */
   private def gramMaxAbsDelta(gm: DenseMatrix[Double],
                               pg: Option[DenseMatrix[Double]],
@@ -253,6 +223,14 @@ object SpectralInit {
     m
   }
 
+  /** (L^-1)^T for G = L L^T — the orthonormalization coefficient matrix
+    * both iteration paths apply. Hand-rolled k x k (k = d+1, tiny)
+    * Cholesky + forward-substitution inverse: the breeze
+    * `inv(cholesky(gm))` it replaces dispatched through the netlib
+    * LAPACK fallback at ~15 ms PER CALL on a 3x3 — ~0.9 s of every
+    * 60-iteration local solve. Shared by the local and distributed
+    * loops, so cross-path parity is preserved by construction.
+    */
   private def cholInvT(gm: DenseMatrix[Double], k: Int): DenseMatrix[Double] = {
     val L = Array.ofDim[Double](k, k)
     var j = 0
@@ -295,60 +273,16 @@ object SpectralInit {
     out
   }
 
-  private def runLocal(spark: SparkSession, srcA: Array[Long],
-                       dstA: Array[Long], d: Int,
+  /** Driver-local execution of the identical orthogonal iteration (see
+    * LocalCap): same sqrt(deg)/hash init, same y = (x + Mx)/2 update,
+    * same Gram/Cholesky orthonormalization and stop.
+    */
+  private def runLocal(spark: SparkSession, ids: Array[Long],
+                       sIdx: Array[Int], dIdx: Array[Int], d: Int,
                        maxIter: Int, seed: Long, gramTol: Double): DataFrame = {
     val k = d + 1
-    val dbg = sys.env.contains("GRAFT_LAYOUT_DEBUG")
-    def ph2[A](l: String)(f: => A): A = if (!dbg) f else {
-      val t0 = System.nanoTime(); val r = f
-      System.err.println(f"[runLocal] $l: ${(System.nanoTime()-t0)/1e9}%.3f s"); r
-    }
-    val ids: Array[Long] = {
-      val all = new Array[Long](srcA.length * 2)
-      System.arraycopy(srcA, 0, all, 0, srcA.length)
-      System.arraycopy(dstA, 0, all, srcA.length, dstA.length)
-      java.util.Arrays.sort(all)
-      var w = 0
-      var j = 0
-      while (j < all.length) {
-        if (w == 0 || all(j) != all(w - 1)) { all(w) = all(j); w += 1 }
-        j += 1
-      }
-      java.util.Arrays.copyOf(all, w)
-    }
-    val idx = {
-      val m = new java.util.HashMap[java.lang.Long, Integer](ids.length * 2)
-      var j = 0; while (j < ids.length) { m.put(ids(j), j); j += 1 }
-      m
-    }
     val n = ids.length
-    val degA: Array[Int] = {
-      val dA = new Array[Int](n)
-      var j = 0
-      while (j < srcA.length) {
-        dA(idx.get(srcA(j)).intValue()) += 1
-        dA(idx.get(dstA(j)).intValue()) += 1
-        j += 1
-      }
-      dA
-    }
-    val rowPtr = new Array[Int](n + 1)
-    var i = 0
-    while (i < n) { rowPtr(i + 1) = rowPtr(i) + degA(i); i += 1 }
-    val colIdx: Array[Int] = {
-      val cIdx = new Array[Int](rowPtr(n))
-      val cursor = rowPtr.clone()
-      var j = 0
-      while (j < srcA.length) {
-        val ia = idx.get(srcA(j)).intValue()
-        val ib = idx.get(dstA(j)).intValue()
-        cIdx(cursor(ia)) = ib; cursor(ia) += 1
-        cIdx(cursor(ib)) = ia; cursor(ib) += 1
-        j += 1
-      }
-      cIdx
-    }
+    val (rowPtr, colIdx) = LocalGraph.undirectedCsr(n, sIdx, dIdx)
     // NOTE: 1/sqrt(deg_v * deg_u) as ONE sqrt, exactly like the
     // distributed path's `w` column (sqrt(a*b) != sqrt(a)*sqrt(b) in
     // the last ulp; parity matters for the cross-path test). The weight
@@ -356,7 +290,7 @@ object SpectralInit {
     // old loop recomputed the sqrt per edge per column per iteration —
     // ~2E*k*iters sqrt+div, the bulk of the local route's compute. Same
     // double computed once, bit-identical accumulation.
-    val degD = degA.map(_.toDouble)
+    val degD = Array.tabulate(n)(v => (rowPtr(v + 1) - rowPtr(v)).toDouble)
     val wCsr: Array[Double] = {
       val w = new Array[Double](rowPtr(n))
       var v = 0
@@ -382,7 +316,7 @@ object SpectralInit {
     locally {
       var v = 0
       while (v < n) {
-        x0(v * k) = math.sqrt(degA(v).toDouble)
+        x0(v * k) = math.sqrt(degD(v))
         var j = 1
         while (j < k) {
           x0(v * k + j) =
@@ -396,7 +330,6 @@ object SpectralInit {
     var iter = 0
     var prevGram: Option[DenseMatrix[Double]] = None
     var done = false
-    val loopT0 = System.nanoTime()
     // SpMV vertex-range chunks, balanced by EDGE count: each vertex's
     // accumulators are chunk-private, so running chunks on parallel
     // driver threads leaves every per-vertex, per-column sum adding the
@@ -419,9 +352,7 @@ object SpectralInit {
       b += n
       b.result()
     }
-    var tSpmv = 0L; var tGram = 0L; var tChol = 0L; var tXn = 0L
     while (iter < maxIter && !done) {
-      val t0 = System.nanoTime()
       // y = (x + Mx)/2, M = D^-1/2 A D^-1/2. k == 3 (d = 2) is the
       // engine's layout default — unrolled registers instead of the
       // k-length accumulator loop; term order per column is identical.
@@ -467,7 +398,6 @@ object SpectralInit {
             }
           }
         }
-      val t1 = System.nanoTime(); tSpmv += t1 - t0
       val gm = DenseMatrix.zeros[Double](k, k)
       for (a <- 0 until k; b <- a until k) {
         var s = 0.0
@@ -475,9 +405,7 @@ object SpectralInit {
         while (vv < n) { s += y(vv * k + a) * y(vv * k + b); vv += 1 }
         gm(a, b) = s; gm(b, a) = s
       }
-      val t2 = System.nanoTime(); tGram += t2 - t1
       val lInvT = cholInvT(gm, k)
-      val t3 = System.nanoTime(); tChol += t3 - t2
       val xn = new Array[Double](n * k)
       var vv = 0
       while (vv < n) {
@@ -492,7 +420,6 @@ object SpectralInit {
         vv += 1
       }
       x = xn
-      tXn += System.nanoTime() - t3
       val delta = prevGram.map(pg => gramMaxAbsDelta(gm, Some(pg), k))
         .getOrElse(Double.MaxValue)
       val scale = gramMaxAbsDelta(gm, None, k)
@@ -500,13 +427,10 @@ object SpectralInit {
       prevGram = Some(gm)
       iter += 1
     }
-    if (dbg) System.err.println(
-      f"[runLocal] loop: ${(System.nanoTime()-loopT0)/1e9}%.3f s, iters=$iter " +
-      f"(spmv ${tSpmv/1e9}%.3f gram ${tGram/1e9}%.3f chol ${tChol/1e9}%.3f xn ${tXn/1e9}%.3f)")
     import spark.implicits._
     val xf = x
-    ph2("toDF")(ids.indices.map(v =>
+    ids.indices.map(v =>
       (ids(v), java.util.Arrays.copyOfRange(xf, v * k + 1, (v + 1) * k)))
-      .toDF("id", "pos"))
+      .toDF("id", "pos")
   }
 }
